@@ -567,7 +567,7 @@ def build_index(
         return combine_segment_rows(postings, docmap, dm_fields,
                                     [n for n, _ in xf_inv])
 
-    def build_combined(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build_combined(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         return _combine(int(key[0]), pdf)
 
     def map_combined(batches):
@@ -742,7 +742,7 @@ def write_segnorms(docmap_df: DataFrame, out_path: str,
     the Lucene .nvd/.nvm analogue)."""
     xf = extra_field_names or []
 
-    def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pack(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("docid")
         rows = {"segment": [int(key[0])], "field": [None],
                 "max_doc": [len(pdf)],

@@ -496,14 +496,14 @@ def make_build_udfs(id_fields, text_col, cfg, with_positions=True):
     the same grouped data; kind-discriminated single-pass variant below."""
     id_cols = [n for n, _ in id_fields]
 
-    def build_postings(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build_postings(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         seg = int(key[0])
         postings, _ = invert_segment(pdf, segment=seg, id_cols=id_cols,
                                      text_col=text_col, cfg=cfg,
                                      with_positions=with_positions)
         return postings
 
-    def build_docmap(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build_docmap(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         seg = int(key[0])
         _, docmap = invert_segment(pdf, segment=seg, id_cols=id_cols,
                                    text_col=text_col, cfg=cfg,

@@ -206,7 +206,7 @@ def merge_index(spark: SparkSession, index: IndexSnapshot, out_dir: str,
     pcols = [n for n, _ in POSTINGS_COLS]
     schema = ", ".join(f"{n} {t}" for n, t in POSTINGS_COLS)
 
-    def do_merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def do_merge(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("old_segment")
         merged = {c: [] for c in pcols}
         # None-safe per-(field, term) grouping: pandas groupby drops null

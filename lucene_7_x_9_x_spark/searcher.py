@@ -1,11 +1,19 @@
 """Driver-side search API over an IndexSnapshot (IndexSearcher analogue).
 
-Plan shape per query (SURVEY.md §3.2 Spark translation):
-  driver:   rewrite -> gather term stats (pruned scan of the terms table)
-            -> per-query constants
-  executors: cogroup(postings rows of the query terms BY segment,
-                     docmap norms BY segment) -> applyInPandas kernel
-            -> per-segment top-k
+Every scoring entry point (search, search_many, matches, count, rescore)
+is a thin wrapper over ONE dispatch, Searcher._score, which scores a
+batch {qid: Query} (SURVEY.md §3.2 Spark translation):
+  driver:   rewrite -> gather term stats (pyarrow seek of the terms
+            table) -> block-max plans and seeded theta floors per query
+  executors: one kernel per segment looping over the batch's queries, in
+            one of three shapes:
+              - broadcast norms (hot mode, or norms <= 64MB): groupBy the
+                pruned postings BY segment -> applyInPandas
+              - cogroup(postings BY segment, segment norm blobs BY
+                segment) -> applyInPandas: the shape that scales
+              - norms only: MatchAll queries over segments holding none of
+                the batch's terms
+            -> per-segment (qid, segment, docid, score) candidates
   driver:   ORDER BY score DESC, segment, docid LIMIT k (Catalyst
             TakeOrderedAndProject) == TopDocs.merge tie semantics
             (solr-8.4.0/.../search/TopDocs.java:75,106)
@@ -17,6 +25,7 @@ BlockTree/FST seek analogue (SURVEY.md §3.3).
 
 from __future__ import annotations
 
+import functools
 import os
 
 import numpy as np
@@ -565,9 +574,9 @@ class Searcher:
         return [(kk, w) for kk, w in pairs if float(w) > 0]
 
     def _impacts_for(self, keys) -> dict:
-        """Key-level memoized impacts read. A batch (search_many) prefetches
-        the UNION of its queries' keys through this in ONE pyarrow read —
-        the round-4 regression was 32 per-query reads before one job."""
+        """Key-level memoized impacts read. _score prefetches the UNION of
+        its batch's keys through this in ONE pyarrow read — the round-4
+        regression was 32 per-query reads before one job."""
         missing = [kk for kk in keys if kk not in self._impacts_cache]
         if missing:
             try:
@@ -592,24 +601,19 @@ class Searcher:
             self._norms_bc = self.index.spark.sparkContext.broadcast(by_seg)
         return self._norms_bc
 
-    def _posting_frame(self, query, terms: set) -> DataFrame:
-        """Pruned postings scan for a query: pushed-down key filter plus
+    def _posting_frame(self, terms: set, needs_pos: bool) -> DataFrame:
+        """Pruned postings scan for a batch: pushed-down key filter plus
         column pruning — the positions column (the .pos file analogue) is
-        only read when the query actually needs positions (SURVEY.md
+        only read when a query actually needs positions (SURVEY.md
         §3.3.4 lazy-positions); docmap-only union columns never are."""
-        post = self._post_src
-        if terms:
-            post = post.where(self._key_filter(terms))
-        else:  # match-all style queries need no postings
-            post = post.where(F.lit(False))
         cols = ["term", "segment", "doc_freq", "total_term_freq",
                 "block_max_docs", "block_ns", "block_docs", "block_freqs",
                 "imp_freqs", "imp_norms"]
         if self._has_field_col:
             cols.insert(1, "field")
-        if _needs_positions(query):
+        if needs_pos:
             cols += ["pos_offsets", "pos_data"]
-        return post.select(*cols)
+        return self._post_src.where(self._key_filter(terms)).select(*cols)
 
     def _segnorms_with_deletes(self, sn: DataFrame) -> DataFrame:
         """Big-deletes fallback (tombstones beyond the driver cap): union
@@ -617,7 +621,7 @@ class Searcher:
         rows (del_docid non-null), semi-joined to sn's segments — the
         compaction cogroup shape. Each kernel task then receives its own
         segment's tombstones without any driver collect or broadcast; the
-        kernels split the rows back apart (_split_sn_deletes)."""
+        kernels split the rows back apart (_parse_norm_side)."""
         d = self.index.deletes().join(
             sn.select("segment").distinct(), "segment")
         sn2 = sn.withColumn("del_docid", F.lit(None).cast("long"))
@@ -628,151 +632,170 @@ class Searcher:
             F.col("docid").cast("long").alias("del_docid"))
         return sn2.unionByName(dd)
 
-    def _kernel_frame(self, query, terms: set,
-                      with_deletes: bool = False) -> DataFrame:
-        post = self._posting_frame(query, terms)
-        # norms come from the tiny per-segment blob table (1 row/segment),
-        # NOT the docmap — a query never shuffles per-doc rows. The blob
-        # side is semi-joined down to segments that actually hold matching
-        # postings: segments without postings can't produce hits, and a
-        # cogroup shuffle partition whose postings side has zero Arrow
-        # batches segfaults pyspark's reader (same bug as the global-empty
-        # guard in _run)
-        sn = (self.index.segnorms()
-              .join(post.select("segment").distinct(), "segment"))
-        if with_deletes:
-            sn = self._segnorms_with_deletes(sn)
-        return post.groupBy("segment").cogroup(sn.groupBy("segment"))
-
-    def _run(self, query, k: int | None, mode: str,
-             after: tuple | None = None) -> DataFrame:
-        query = self.rewrite(query)
-        terms = Q.scoring_terms(query) | _filter_terms(query)
+    def _score(self, queries: dict, k: int | None, mode: str = "auto",
+               after: tuple | None = None) -> DataFrame:
+        """The one scoring dispatch behind search, search_many, matches,
+        count and rescore (a single query is the batch of one, as a
+        single-CollectorManager search is in IndexSearcher.java:571,
+        606-621). queries: {qid: Query}. Returns the per-segment
+        candidates DataFrame(qid, segment, docid, score): each segment's
+        top-k per query when k is given, every match when k is None.
+        mode="complete" or a searchAfter cursor disables block-max."""
+        rewritten = {qid: self.rewrite(q) for qid, q in queries.items()}
+        terms: set = set()
+        for q in rewritten.values():
+            terms |= Q.scoring_terms(q) | _filter_terms(q)
         stats = self._global_stats(terms)
-        plan = (classify_blockmax(query)
-                if mode in ("auto", "blockmax") and stats.is_bm25 else None)
-        use_blockmax = (plan is not None and k is not None
-                        and mode != "complete" and after is None)
+        blockmax = (k is not None and after is None and stats.is_bm25
+                    and mode in ("auto", "blockmax"))
+        plans = {qid: classify_blockmax(q) if blockmax else None
+                 for qid, q in rewritten.items()}
+        matchall = [qid for qid, q in rewritten.items()
+                    if _contains_matchall(q)]
+        schema = "qid string, segment int, docid long, score float"
 
         # an all-absent term set means the postings scan is empty; a
         # zero-batch nested-schema side crashes pyspark's Arrow reader
-        # (pyspark 4.1 arrow_to_pandas segfault), and we can answer without
-        # the kernel anyway unless a MatchAll clause is involved
+        # (pyspark 4.1 arrow_to_pandas segfault), and the batch can be
+        # answered without the kernel anyway unless a MatchAll is involved
         empty_postings = all(stats.doc_freqs.get(t, 0) == 0 for t in terms)
-        if empty_postings and not _contains_matchall(query):
-            return self.index.spark.createDataFrame(
-                [], "segment int, docid long, score float")
+        if empty_postings and not matchall:
+            return self.index.spark.createDataFrame([], schema)
 
         del_bc = self._deleted_broadcast()
         big_deletes = self._big_deletes
-        # task-local theta floor: this dict is pickled into each task's
-        # closure copy, so segments processed by the SAME task seed each
-        # other's competitive threshold (the MaxScoreAccumulator slice-
-        # sharing analogue, IndexSearcher.java:399-402) with zero
+        # task-local theta floors, one per qid: this dict is pickled into
+        # each task's closure copy, so segments processed by the SAME task
+        # seed each other's competitive threshold (the MaxScoreAccumulator
+        # slice-sharing analogue, IndexSearcher.java:399-402) with zero
         # cross-task coordination; exact because any subset's k-th score
-        # lower-bounds the global k-th and skips stay strict.
-        # When the query shape allows it, the dict starts PRE-SEEDED with
-        # the driver-computed global floor from index-time impacts
-        # (_seed_theta) — every task, including each one's FIRST segment,
-        # then prunes against a near-final threshold
+        # lower-bounds the global k-th and skips stay strict. Eligible
+        # queries start PRE-SEEDED with the driver-computed global floor
+        # from index-time impacts (_seed_theta), so every task, including
+        # each one's FIRST segment, prunes against a near-final threshold
         task_theta: dict = {}
-        if use_blockmax and del_bc is None and not big_deletes:
-            t0 = self._seed_theta(plan, stats, k)
-            if t0 > 0.0:
-                task_theta["q"] = t0
+        bm_plans = {qid: p for qid, p in plans.items() if p is not None}
+        if bm_plans and del_bc is None and not big_deletes:
+            # the UNION of the batch's impact keys in ONE pyarrow read:
+            # per-query reads cost 32 driver round trips before a 32-query
+            # batch's job (the round-4 batch_32_hot 1.9x regression)
+            self._impacts_for({kk for p in bm_plans.values()
+                               for kk, _ in self._theta_pairs(p, stats)})
+            for qid, plan in bm_plans.items():
+                t0 = self._seed_theta(plan, stats, k)
+                if t0 > 0.0:
+                    task_theta[qid] = t0
 
-        def kernel_body(seg: int, post_pdf: pd.DataFrame, norms, max_doc,
-                        fnorms, dele2=None) -> pd.DataFrame:
-            reader = SparkSegmentReader(post_pdf, norms, max_doc,
-                                        field_norms=fnorms)
-            dele = dele2 if dele2 is not None else (
-                del_bc.value.get(seg) if del_bc is not None else None)
-            if use_blockmax:
-                d, s, _ = blockmax_topk(reader, stats, plan, k, deleted=dele,
-                                        theta0=task_theta.get("q"))
-                if len(d) == k:
-                    task_theta["q"] = max(task_theta.get("q", 0.0),
-                                          float(s[-1]))
+        def score_segment(key, post_pdf: pd.DataFrame, norms, dele,
+                          qids) -> pd.DataFrame:
+            """Score one segment's group for the given qids. norms: the
+            segment's parsed segnorms, or None when it has none."""
+            seg = int(key[0])
+            if norms is None:
+                return pd.DataFrame({"qid": [], "segment": [], "docid": [],
+                                     "score": []})
+            reader = SparkSegmentReader(post_pdf, norms[0], norms[1],
+                                        field_norms=norms[2])
+            if dele is None and del_bc is not None:
+                dele = del_bc.value.get(seg)
+            out = []
+            for qid in qids:
+                plan = plans[qid]
+                if plan is not None:
+                    d, s, _ = blockmax_topk(reader, stats, plan, k,
+                                            deleted=dele,
+                                            theta0=task_theta.get(qid))
+                    if len(d) == k:
+                        task_theta[qid] = max(task_theta.get(qid, 0.0),
+                                              float(s[-1]))
+                else:
+                    m = ex.evaluate(reader, stats, rewritten[qid])
+                    d, s = m.docids, m.scores
+                    if dele is not None:
+                        keep = ~np.isin(d, dele, assume_unique=True)
+                        d, s = d[keep], s[keep]
+                    if after is not None:
+                        # searchAfter cursor (IndexSearcher.java:388-422):
+                        # keep docs strictly after (score, segment, docid)
+                        a_s, a_seg, a_doc = (np.float32(after[0]),
+                                             after[1], after[2])
+                        keep = (s < a_s) | ((s == a_s) & (
+                            (seg > a_seg) | ((seg == a_seg) & (d > a_doc))))
+                        d, s = d[keep], s[keep]
+                    if k is not None:
+                        d, s = ex.top_k(ex.Matches(d, s), k)
+                out.append(pd.DataFrame({
+                    "qid": qid,
+                    "segment": np.full(len(d), seg, dtype=np.int32),
+                    "docid": d, "score": s.astype(np.float32)}))
+            return pd.concat(out, ignore_index=True)
+
+        all_qids = list(rewritten)
+        parts = []
+        if not empty_postings:
+            post = self._posting_frame(
+                terms, any(_needs_positions(q) for q in rewritten.values()))
+            if (self._hot or self._small_norms) and not big_deletes:
+                # one-stage fast path: norms ride a broadcast instead of a
+                # cogroup side. Hot mode reads the persisted pre-partitioned
+                # postings (groupBy reuses the partitioning — no exchange);
+                # cold-with-small-norms shuffles only the pruned postings
+                # rows of the batch's terms (an explicit repartition so AQE
+                # can't coalesce the compute-bound kernel onto one task)
+                bc = self._segnorms_broadcast()
+
+                def kernel_bc(key: tuple, post_pdf: pd.DataFrame
+                              ) -> pd.DataFrame:
+                    return score_segment(key, post_pdf,
+                                         bc.value.get(int(key[0])), None,
+                                         all_qids)
+
+                if not self._hot:
+                    post = post.repartition(self._n_part, "segment")
+                parts.append(post.groupBy("segment")
+                             .applyInPandas(kernel_bc, schema=schema))
             else:
-                m = ex.evaluate(reader, stats, query)
-                d, s = m.docids, m.scores
-                if dele is not None:
-                    keep = ~np.isin(d, dele, assume_unique=True)
-                    d, s = d[keep], s[keep]
-                if after is not None:
-                    # searchAfter cursor (IndexSearcher.java:388-422):
-                    # keep docs strictly after (score, segment, docid)
-                    a_s, a_seg, a_doc = (np.float32(after[0]), after[1],
-                                         after[2])
-                    keep = (s < a_s) | ((s == a_s) & (
-                        (seg > a_seg) | ((seg == a_seg) & (d > a_doc))))
-                    d, s = d[keep], s[keep]
-                if k is not None:
-                    m2 = ex.Matches(d, s)
-                    d, s = ex.top_k(m2, k)
-            return pd.DataFrame({
-                "segment": np.full(len(d), seg, dtype=np.int32),
-                "docid": d, "score": s.astype(np.float32)})
+                # cogroup with the per-segment norm blobs (1 row/segment,
+                # never the docmap), semi-joined down to segments holding
+                # matching postings: a cogroup partition whose postings
+                # side has zero Arrow batches hits the same segfault as the
+                # guard above
+                sn = (self.index.segnorms()
+                      .join(post.select("segment").distinct(), "segment"))
+                if big_deletes:
+                    sn = self._segnorms_with_deletes(sn)
 
-        def kernel(key, post_pdf: pd.DataFrame, sn_pdf: pd.DataFrame
-                   ) -> pd.DataFrame:
-            sn_rows, dele2 = _split_sn_deletes(sn_pdf)
-            if len(sn_rows) == 0:
-                return pd.DataFrame({"segment": [], "docid": [], "score": []})
-            return kernel_body(int(key[0]), post_pdf,
-                               *_parse_segnorms(sn_rows), dele2=dele2)
+                def kernel_cogroup(key: tuple, post_pdf: pd.DataFrame,
+                                   sn_pdf: pd.DataFrame) -> pd.DataFrame:
+                    return score_segment(key, post_pdf,
+                                         *_parse_norm_side(sn_pdf), all_qids)
 
-        def kernel_sn(key, sn_pdf: pd.DataFrame) -> pd.DataFrame:
-            return kernel(key, pd.DataFrame({"term": []}), sn_pdf)
-
-        schema = "segment int, docid long, score float"
-        if empty_postings:  # MatchAll-only query: norms-only kernel
-            sn_all = self.index.segnorms()
-            if big_deletes:
-                sn_all = self._segnorms_with_deletes(sn_all)
-            return (sn_all.groupBy("segment")
-                    .applyInPandas(kernel_sn, schema=schema))
-        if (self._hot or self._small_norms) and not big_deletes:
-            # one-stage fast path: norms ride a broadcast instead of a
-            # cogroup side. Hot mode reads the persisted pre-partitioned
-            # postings (groupBy reuses the partitioning — no exchange);
-            # cold-with-small-norms shuffles only the pruned postings rows
-            # of the query's terms (an explicit repartition so AQE can't
-            # coalesce the compute-bound kernel onto one task)
-            bc = self._segnorms_broadcast()
-
-            def kernel_hot(key, post_pdf: pd.DataFrame) -> pd.DataFrame:
-                got = bc.value.get(int(key[0]))
-                if got is None:
-                    return pd.DataFrame(
-                        {"segment": [], "docid": [], "score": []})
-                return kernel_body(int(key[0]), post_pdf, *got)
-
-            pf = self._posting_frame(query, terms)
-            if not self._hot:
-                pf = pf.repartition(self._n_part, "segment")
-            main = pf.groupBy("segment").applyInPandas(kernel_hot,
-                                                       schema=schema)
-        else:
-            main = self._kernel_frame(
-                query, terms, with_deletes=big_deletes).applyInPandas(
-                kernel, schema=schema)
-        if _contains_matchall(query):
-            # segments holding NONE of the query's terms still match
-            # through the MatchAll clause (term clauses contribute nothing
-            # there): run them on the norms-only kernel and union — the
-            # postings-driven cogroup above cannot cover them, and feeding
-            # it zero-postings groups would hit the zero-batch Arrow bug
-            seg_with = (self._post_src.where(self._key_filter(terms))
-                        .select("segment").distinct())
-            rest = self.index.segnorms().join(seg_with, "segment",
-                                              "left_anti")
+                parts.append(post.groupBy("segment")
+                             .cogroup(sn.groupBy("segment"))
+                             .applyInPandas(kernel_cogroup, schema=schema))
+        if matchall:
+            # coverage rule: segments holding NONE of the batch's terms
+            # still match through a MatchAll clause (term clauses add
+            # nothing there). The postings-driven kernels above cannot
+            # reach them, so the MatchAll queries alone run a norms-only
+            # kernel over that complement (all segments when the postings
+            # scan is empty)
+            rest = self.index.segnorms()
+            if not empty_postings:
+                rest = rest.join(
+                    self._post_src.where(self._key_filter(terms))
+                    .select("segment").distinct(), "segment", "left_anti")
             if big_deletes:
                 rest = self._segnorms_with_deletes(rest)
-            main = main.unionByName(
-                rest.groupBy("segment").applyInPandas(kernel_sn,
-                                                      schema=schema))
-        return main
+
+            def kernel_norms(key: tuple, sn_pdf: pd.DataFrame
+                             ) -> pd.DataFrame:
+                return score_segment(key, pd.DataFrame({"term": []}),
+                                     *_parse_norm_side(sn_pdf), matchall)
+
+            parts.append(rest.groupBy("segment")
+                         .applyInPandas(kernel_norms, schema=schema))
+        return functools.reduce(DataFrame.unionByName, parts)
 
     # ---------------- public API
     def search(self, query, k: int = 10, mode: str = "auto",
@@ -783,7 +806,7 @@ class Searcher:
 
         after=(score, segment, docid) pages past a previous result row
         (searchAfter, IndexSearcher.java:388-422)."""
-        res = (self._run(query, k, mode, after=after)
+        res = (self._score({"q": query}, k, mode, after)
                .orderBy(F.desc("score"), "segment", "docid").limit(k))
         res = _rank_limited(
             res, [F.desc("score"), "segment", "docid"], "docid")
@@ -799,7 +822,7 @@ class Searcher:
 
     def matches(self, query) -> DataFrame:
         """All matching docs: DataFrame(segment, docid, score)."""
-        return self._run(query, None, "complete")
+        return self._score({"q": query}, None, "complete").drop("qid")
 
     def cached_matches(self, query) -> DataFrame:
         """Filter-context matches through the LRU query cache: the first
@@ -811,8 +834,7 @@ class Searcher:
         got = self.query_cache.get(key)
         if got is not None:
             return got
-        df = self._run(rq, None, "complete").select("segment",
-                                                    "docid").persist()
+        df = self.matches(rq).select("segment", "docid").persist()
         self.query_cache.put(key, df)
         return df
 
@@ -1161,7 +1183,7 @@ class Searcher:
         post = post.select(*cols)
         fn = function
 
-        def kernel(pkey, post_pdf: pd.DataFrame) -> pd.DataFrame:
+        def kernel(pkey: tuple, post_pdf: pd.DataFrame) -> pd.DataFrame:
             seg = int(pkey[0])
             reader = SparkSegmentReader(post_pdf, np.zeros(0, np.uint8), 0)
             fp = reader.flat_payloads(kk)
@@ -1229,7 +1251,7 @@ class Searcher:
             cols.insert(1, "field")
         post = post.select(*cols)
 
-        def kernel(pkey, post_pdf: pd.DataFrame) -> pd.DataFrame:
+        def kernel(pkey: tuple, post_pdf: pd.DataFrame) -> pd.DataFrame:
             seg = int(pkey[0])
             reader = SparkSegmentReader(post_pdf,
                                         np.zeros(0, np.uint8), 0)
@@ -1276,7 +1298,7 @@ class Searcher:
         fast = self._count_fast(q)
         if fast is not None:
             return fast
-        return self._run(q, None, "complete").count()
+        return self.matches(q).count()
 
     def _count_fast(self, q) -> int | None:
         """Metadata-only count for the shapes Weight#count can answer,
@@ -1312,7 +1334,7 @@ class Searcher:
         aggs = {"total": F.sum, "max": F.max, "min": F.min, "avg": F.avg}
         if score_mode not in aggs and score_mode != "none":
             raise ValueError(f"unknown score_mode {score_mode!r}")
-        m = self._run(child_query, None, "complete")
+        m = self.matches(child_query)
         dm = self.index.docmap().select("segment", "docid",
                                         *self.index.id_cols)
         pcol = parent if not isinstance(parent, str) else F.col(parent)
@@ -1344,7 +1366,7 @@ class Searcher:
         to_parent_join). Returns DataFrame(rank, segment, docid,
         <id cols>, parent, score) ordered (score desc, parent asc,
         segment asc, docid asc)."""
-        m = self._run(parent_query, None, "complete")
+        m = self.matches(parent_query)
         dm = self.index.docmap().select("segment", "docid",
                                         *self.index.id_cols)
         pcol = parent if not isinstance(parent, str) else F.col(parent)
@@ -1396,7 +1418,7 @@ class Searcher:
             if c not in dm_cols:
                 raise ValueError(f"join field {c!r} is not a stored "
                                  f"docmap column")
-        m = self._run(from_query, None, "complete")
+        m = self.matches(from_query)
         dm = self.index.docmap()
         fv = (m.join(dm.select("segment", "docid",
                                F.col(from_col).alias("join_value")),
@@ -1908,147 +1930,12 @@ class Searcher:
 
         queries: {qid: Query}. Each query is rewritten and classified
         independently; block-max is used where eligible."""
-        rewritten = {qid: self.rewrite(q) for qid, q in queries.items()}
-        # MatchAll-containing queries can hit docs in segments that hold
-        # NONE of the batch's terms, which the postings-driven cogroup below
-        # (and its segnorms semi-join) would silently drop — route them
-        # through the single-query path, which has a segnorms-only kernel
-        extra = []
-        for qid in [i for i, q in rewritten.items() if _contains_matchall(q)]:
-            r = (self._run(rewritten.pop(qid), k, "auto")
-                 .orderBy(F.desc("score"), "segment", "docid").limit(k))
-            extra.append(
-                _rank_limited(r, [F.desc("score"), "segment", "docid"],
-                              "docid")
-                 .select(F.lit(qid).alias("qid"), "rank", "segment",
-                         "docid", "score"))
-
-        def _with_extra(batched: DataFrame) -> DataFrame:
-            for e in extra:
-                batched = batched.unionByName(e)
-            return batched
-
-        empty = self.index.spark.createDataFrame(
-            [], "qid string, rank int, segment int, docid long, score float")
-        if not rewritten:
-            return _with_extra(empty)
-        all_terms = set()
-        for q in rewritten.values():
-            all_terms |= Q.scoring_terms(q) | _filter_terms(q)
-        stats = self._global_stats(all_terms)
-        if all(stats.doc_freqs.get(t, 0) == 0 for t in all_terms):
-            # rest of the batch would leave the postings scan empty (see the
-            # zero-batch Arrow guard in _run); term-based queries can't hit
-            return _with_extra(empty)
-        plans = ({qid: classify_blockmax(q) for qid, q in rewritten.items()}
-                 if stats.is_bm25 else {qid: None for qid in rewritten})
-        needs_pos = any(_needs_positions(q) for q in rewritten.values())
-
-        post = self._post_src
-        if all_terms:
-            post = post.where(self._key_filter(all_terms))
-        else:
-            post = post.where(F.lit(False))
-        cols = ["term", "segment", "doc_freq", "total_term_freq",
-                "block_max_docs", "block_ns", "block_docs", "block_freqs",
-                "imp_freqs", "imp_norms"]
-        if self._has_field_col:
-            cols.insert(1, "field")
-        if needs_pos:
-            cols += ["pos_offsets", "pos_data"]
-        post = post.select(*cols)
-        sn = (self.index.segnorms()
-              .join(post.select("segment").distinct(), "segment"))
-
-        del_bc = self._deleted_broadcast()
-        big_deletes = self._big_deletes
-        task_theta: dict = {}  # per-qid cross-segment theta (see _run)
-        if del_bc is None and not big_deletes:
-            # driver-seeded global floors, one per eligible query (the
-            # MaxScoreAccumulator completion — see _seed_theta). Prefetch
-            # the UNION of the batch's eligible keys in ONE pyarrow read:
-            # per-query reads here cost 32 driver round-trips and caused
-            # the round-4 batch_32_hot 1.9x regression.
-            batch_keys: set = set()
-            for qid, plan in plans.items():
-                if plan is not None:
-                    batch_keys |= {kk for kk, _ in
-                                   self._theta_pairs(plan, stats)}
-            if batch_keys:
-                self._impacts_for(batch_keys)
-            for qid, plan in plans.items():
-                if plan is not None:
-                    t0 = self._seed_theta(plan, stats, k)
-                    if t0 > 0.0:
-                        task_theta[qid] = t0
-
-        def kernel_body(seg: int, post_pdf: pd.DataFrame, norms, max_doc,
-                        fnorms, dele2=None) -> pd.DataFrame:
-            out = []
-            reader = SparkSegmentReader(post_pdf, norms, max_doc,
-                                        field_norms=fnorms)
-            dele = dele2 if dele2 is not None else (
-                del_bc.value.get(seg) if del_bc is not None else None)
-            for qid, q in rewritten.items():
-                plan = plans[qid]
-                if plan is not None:
-                    d, s_, _ = blockmax_topk(reader, stats, plan, k,
-                                             deleted=dele,
-                                             theta0=task_theta.get(qid))
-                    if len(d) == k:
-                        task_theta[qid] = max(task_theta.get(qid, 0.0),
-                                              float(s_[-1]))
-                else:
-                    m = ex.evaluate(reader, stats, q)
-                    if dele is not None:
-                        keep = ~np.isin(m.docids, dele, assume_unique=True)
-                        m = ex.Matches(m.docids[keep], m.scores[keep])
-                    d, s_ = ex.top_k(m, k)
-                out.append(pd.DataFrame({
-                    "qid": qid,
-                    "segment": np.full(len(d), seg, dtype=np.int32),
-                    "docid": d, "score": s_.astype(np.float32)}))
-            return pd.concat(out, ignore_index=True) if out else \
-                pd.DataFrame({"qid": [], "segment": [], "docid": [],
-                              "score": []})
-
-        def kernel(key, post_pdf: pd.DataFrame, sn_pdf: pd.DataFrame
-                   ) -> pd.DataFrame:
-            sn_rows, dele2 = _split_sn_deletes(sn_pdf)
-            if len(sn_rows) == 0:
-                return pd.DataFrame({"qid": [], "segment": [], "docid": [],
-                                     "score": []})
-            return kernel_body(int(key[0]), post_pdf,
-                               *_parse_segnorms(sn_rows), dele2=dele2)
-
-        qschema = "qid string, segment int, docid long, score float"
-        if (self._hot or self._small_norms) and not big_deletes:
-            # broadcast norms: one stage, no cogroup (see _run); cold-
-            # with-small-norms repartitions the pruned postings explicitly
-            # so AQE can't coalesce the compute-bound kernel
-            bc = self._segnorms_broadcast()
-
-            def kernel_hot(key, post_pdf: pd.DataFrame) -> pd.DataFrame:
-                got = bc.value.get(int(key[0]))
-                if got is None:
-                    return pd.DataFrame({"qid": [], "segment": [],
-                                         "docid": [], "score": []})
-                return kernel_body(int(key[0]), post_pdf, *got)
-
-            pf = post if self._hot else post.repartition(self._n_part,
-                                                         "segment")
-            res = (pf.groupBy("segment")
-                   .applyInPandas(kernel_hot, schema=qschema))
-        else:
-            sn2 = self._segnorms_with_deletes(sn) if big_deletes else sn
-            res = (post.groupBy("segment").cogroup(sn2.groupBy("segment"))
-                   .applyInPandas(kernel, schema=qschema))
         w = Window.partitionBy("qid").orderBy(F.desc("score"), "segment",
                                               "docid")
-        return _with_extra(
-            res.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("qid", "rank", "segment", "docid", "score"))
+        return (self._score(queries, k)
+                .withColumn("rank", F.row_number().over(w))
+                .where(F.col("rank") <= k)
+                .select("qid", "rank", "segment", "docid", "score"))
 
     def explain(self, query, segment: int, docid: int) -> list[dict]:
         """Score explanation for one doc — the Weight.explain / Explanation
@@ -2160,69 +2047,31 @@ class Searcher:
             raise ValueError(
                 f"rescore() input exceeds max_docs={max_docs}; rescoring is "
                 "a top-N operation — limit the first pass or raise max_docs")
-        wanted: dict = {}
-        for r in rows:
-            wanted.setdefault(int(r.segment), {})[int(r.docid)] = \
-                np.float32(r.score)
-        query2 = self.rewrite(query2)
-        terms = Q.scoring_terms(query2) | _filter_terms(query2)
-        stats = self._global_stats(terms)
-        w32 = np.float32(weight)
-        if all(stats.doc_freqs.get(t, 0) == 0 for t in terms) \
-                and not _contains_matchall(query2):
-            # second query matches nothing: combined == first-pass scores
-            res0 = (first_pass.select("segment", "docid", "score")
-                    .orderBy(F.desc("score"), "segment", "docid").limit(k))
-            return _rank_limited(
-                res0, [F.desc("score"), "segment", "docid"], "docid")
-
-        def kernel(key, post_pdf, sn_pdf):
-            seg = int(key[0])
-            seg_docs = wanted.get(seg, {})
-            if not seg_docs or len(sn_pdf) == 0:
-                return pd.DataFrame({"segment": [], "docid": [], "score": []})
-            norms, max_doc, fnorms = _parse_segnorms(sn_pdf)
-            reader = SparkSegmentReader(post_pdf, norms, max_doc,
-                                        field_norms=fnorms)
-            m = ex.evaluate(reader, stats, query2)
-            d = np.array(sorted(seg_docs), dtype=np.int64)
-            base = np.array([seg_docs[x] for x in sorted(seg_docs)],
-                            dtype=np.float32)
-            pos = np.searchsorted(m.docids, d)
-            ok = pos < len(m.docids)
-            ok[ok] = m.docids[pos[ok]] == d[ok]
-            add = np.zeros(len(d), dtype=np.float32)
-            add[ok] = m.scores[pos[ok]]
-            comb = (base.astype(np.float64)
-                    + (w32 * add).astype(np.float64)).astype(np.float32)
-            return pd.DataFrame({
-                "segment": np.full(len(d), seg, dtype=np.int32),
-                "docid": d, "score": comb})
-
-        res = (self._kernel_frame(query2, terms)
-               .applyInPandas(kernel,
-                              schema="segment int, docid long, score float"))
-        # coverage rule: first-pass docs in segments that hold NONE of
-        # query2's terms must still come back — with their base score
-        # (query2 contributes 0 there) or with query2's MatchAll
-        # contribution. The postings-driven cogroup above cannot cover
-        # those segments, so ALWAYS union a norms-only kernel over the
-        # complement ("docs not matching query2 keep their score",
-        # QueryRescorer.java combine()).
-
-        def kernel_sn(key, sn_pdf):
-            return kernel(key, pd.DataFrame({"term": []}), sn_pdf)
-        seg_with = (self._post_src.where(self._key_filter(terms))
-                    .select("segment").distinct())
-        rest = self.index.segnorms().join(seg_with, "segment",
-                                          "left_anti")
-        res = res.unionByName(
-            rest.groupBy("segment").applyInPandas(
-                kernel_sn, schema="segment int, docid long,"
-                                  " score float"))
-        res = res.orderBy(F.desc("score"), "segment", "docid").limit(k)
-        return _rank_limited(res, [F.desc("score"), "segment", "docid"],
-                             "docid")
+        base = {(int(r.segment), int(r.docid)): np.float32(r.score)
+                for r in rows}
+        add: dict = {}
+        if base:
+            # query2's scores for the first-pass docs only; docs it does
+            # not match (in any segment) keep their base score
+            pairs = self.index.spark.createDataFrame(
+                list(base), "segment int, docid long")
+            add = {(int(r.segment), int(r.docid)): np.float32(r.score)
+                   for r in self._score({"q": query2}, None, "complete")
+                   .join(F.broadcast(pairs), ["segment", "docid"])
+                   .collect()}
+        keys = list(base)
+        seg = np.array([x[0] for x in keys], dtype=np.int32)
+        doc = np.array([x[1] for x in keys], dtype=np.int64)
+        b = np.array([base[x] for x in keys], dtype=np.float32)
+        a = np.array([add.get(x, 0.0) for x in keys], dtype=np.float32)
+        comb = (b.astype(np.float64)
+                + (np.float32(weight) * a).astype(np.float64)
+                ).astype(np.float32)
+        top = np.lexsort((doc, seg, -comb))[:k]
+        return self.index.spark.createDataFrame(
+            [(int(seg[i]), int(doc[i]), float(comb[i]), r + 1)
+             for r, i in enumerate(top)],
+            "segment int, docid long, score float, rank int")
 
 
 def _scoring_leaves(q, boost: float = 1.0) -> list:
@@ -2246,16 +2095,17 @@ def _scoring_leaves(q, boost: float = 1.0) -> list:
     return []
 
 
-def _split_sn_deletes(sn_pdf: pd.DataFrame):
-    """Split an augmented norms cogroup side (see _segnorms_with_deletes)
-    back into (segnorm rows, sorted deleted-docid array | None). Frames
-    without the del_docid column pass through untouched."""
-    if "del_docid" not in sn_pdf.columns:
-        return sn_pdf, None
-    mask = sn_pdf["del_docid"].isna()
-    dele = np.unique(
-        sn_pdf.loc[~mask, "del_docid"].to_numpy(dtype=np.int64))
-    return sn_pdf[mask], (dele if len(dele) else None)
+def _parse_norm_side(sn_pdf: pd.DataFrame):
+    """(parsed segnorms | None, sorted deleted-docid array | None) of one
+    segment's norms-side group; an augmented side (see
+    _segnorms_with_deletes) is split back apart on its del_docid column."""
+    dele = None
+    if "del_docid" in sn_pdf.columns:
+        mask = sn_pdf["del_docid"].isna()
+        dele = np.unique(
+            sn_pdf.loc[~mask, "del_docid"].to_numpy(dtype=np.int64))
+        sn_pdf, dele = sn_pdf[mask], (dele if len(dele) else None)
+    return (_parse_segnorms(sn_pdf) if len(sn_pdf) else None), dele
 
 
 def _parse_segnorms(sn_pdf: pd.DataFrame):

@@ -62,7 +62,7 @@ def append_batch(spark: SparkSession, corpus_batch: DataFrame,
 
     combined_ddl = combined_schema_ddl(id_fields)
 
-    def build_combined(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build_combined(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         seg = int(key[0])
         postings, docmap = invert_segment(
             pdf, segment=seg, id_cols=id_cols, text_col="__text__",

@@ -3,8 +3,7 @@
 # given command. Usage: waitq.sh [threshold] -- cmd args...
 # The box has a bursty co-tenant (CLAUDE.md): loadavg_1m_start < ~1.5 is
 # the only usable quiet signal; measurements taken under load are noise.
-THRESH="${1:-1.5}"
-shift
+if [ "$1" = "--" ]; then THRESH=1.5; else THRESH="${1:-1.5}"; shift; fi
 [ "$1" = "--" ] && shift
 for i in $(seq 1 240); do
   LA=$(cut -d' ' -f1 /proc/loadavg)

@@ -1,7 +1,8 @@
 """Mixed MatchAll + term queries must cover EVERY segment — including
 segments that hold none of the query's terms (regression: the segnorms
-semi-join used to drop them). Checked against the in-memory oracle in cold,
-hot (cache_index), and rescore paths."""
+semi-join used to drop them). Checked against the in-memory oracle on each
+kernel shape of Searcher._score (cold broadcast-norms, hot cache_index,
+cogroup), for search, count and rescore."""
 
 import numpy as np
 import pytest
@@ -14,6 +15,7 @@ from lucene_7_x_9_x_spark.plans.query import (BooleanQuery, BoostQuery,
                                               ConstantScoreQuery,
                                               MatchAllDocsQuery, Occur,
                                               TermQuery)
+from tests.test_search_many import KERNEL_SHAPES, shaped_searcher
 
 F32 = np.float32
 
@@ -38,12 +40,12 @@ MIXED = BooleanQuery([(Occur.SHOULD, MatchAllDocsQuery()),
                       (Occur.SHOULD, TermQuery("zonly"))])
 
 
-@pytest.mark.parametrize("hot", [False, True])
-def test_mixed_matchall_covers_all_segments(skewed_index, hot):
+@pytest.mark.parametrize("shape", KERNEL_SHAPES)
+def test_mixed_matchall_covers_all_segments(skewed_index, shape):
     idx, eng = skewed_index
-    s = Searcher(idx, cache_index=hot)
-    assert s.count(MIXED) == 40
-    got = s.search(MIXED, 40).toPandas()
+    with shaped_searcher(idx, shape) as s:
+        assert s.count(MIXED) == 40
+        got = s.search(MIXED, 40).toPandas()
     want = eng.search(MIXED, 40)
     # docid == doc_id here (range-partitioned by doc_id, 10 per segment)
     assert sorted(got.doc_id.tolist()) == sorted(range(40))
@@ -51,9 +53,6 @@ def test_mixed_matchall_covers_all_segments(skewed_index, hot):
                      got.score.to_numpy(np.float32).tolist()))
     for r in range(40):
         assert F32(by_id[r]) == want.score[want.docid == r].iloc[0]
-    if hot:
-        s._post_src.unpersist()
-        s._terms_src.unpersist()
 
 
 def test_matchall_filter_clause_covers_all_segments(skewed_index):
@@ -71,11 +70,13 @@ def test_matchall_filter_clause_covers_all_segments(skewed_index):
         assert F32(by_id[r]) == want.score[want.docid == r].iloc[0]
 
 
-def test_rescore_with_matchall_second_query(skewed_index):
+@pytest.mark.parametrize("shape", KERNEL_SHAPES)
+def test_rescore_with_matchall_second_query(skewed_index, shape):
     idx, eng = skewed_index
-    s = Searcher(idx)
-    first = s.search(TermQuery("common"), 40)
-    out = s.rescore(first, MIXED, weight=2.0, k=40).toPandas()
+    with shaped_searcher(idx, shape) as s:
+        first = s.search(TermQuery("common"), 40)
+        out = s.rescore(first, MIXED, weight=2.0, k=40).toPandas()
+    assert len(out) == 40  # nothing dropped
     # every first-pass doc gains 2 * (matchall 1.0 + zonly contribution)
     m1 = eng.matches(TermQuery("common"))
     m2 = eng.matches(MIXED)
@@ -92,14 +93,16 @@ def test_rescore_with_matchall_second_query(skewed_index):
         assert F32(r.score) == want[did], did
 
 
-def test_rescore_keeps_base_score_in_uncovered_segments(skewed_index):
+@pytest.mark.parametrize("shape", KERNEL_SHAPES)
+def test_rescore_keeps_base_score_in_uncovered_segments(skewed_index, shape):
     # query2's terms live in ONE segment; first-pass docs in the other
     # segments must keep their base score (query2 adds 0 there) — the
     # QueryRescorer contract, not just the MatchAll case
     idx, eng = skewed_index
-    s = Searcher(idx)
-    first = s.search(TermQuery("common"), 40)
-    out = s.rescore(first, TermQuery("zonly"), weight=2.0, k=40).toPandas()
+    with shaped_searcher(idx, shape) as s:
+        first = s.search(TermQuery("common"), 40)
+        out = s.rescore(first, TermQuery("zonly"), weight=2.0,
+                        k=40).toPandas()
     assert len(out) == 40  # nothing dropped
     m1 = eng.matches(TermQuery("common"))
     m2 = eng.matches(TermQuery("zonly"))

@@ -198,14 +198,12 @@ def test_sorted_by_docvalues_external_missing(spark, so_index):
 def test_count_fast_paths(spark, so_index, monkeypatch):
     s, pdf = so_index
     term = "h3"
-    slow_term = s._run(s.rewrite(Q.TermQuery(term)), None,
-                       "complete").count()
-    slow_all = s._run(s.rewrite(Q.MatchAllDocsQuery()), None,
-                      "complete").count()
+    slow_term = s.matches(Q.TermQuery(term)).count()
+    slow_all = s.matches(Q.MatchAllDocsQuery()).count()
 
     def boom(*a, **k):
         raise AssertionError("fast path should not run the kernel")
-    monkeypatch.setattr(s, "_run", boom)
+    monkeypatch.setattr(s, "_score", boom)
     assert s.count(Q.TermQuery(term)) == slow_term
     assert s.count(Q.MatchAllDocsQuery()) == slow_all == len(pdf)
     assert s.count(Q.BoostQuery(Q.TermQuery(term), 2.0)) == slow_term
