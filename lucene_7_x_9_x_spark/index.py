@@ -386,6 +386,38 @@ class IndexSnapshot:
                     np.asarray(v[1], dtype=np.int64))
                 for k, v in acc.items()}
 
+    def docmap_lookup(self, segment, docid, cols):
+        """Driver-side point read of stored docmap columns for the given
+        (segment, docid) pairs — the StoredFieldsReader.document(docid)
+        analogue a search runs for its k hits only
+        (solr-8.4.0/.../codecs/StoredFieldsReader.java capability). Pure
+        pyarrow read with a pushed-down per-segment IN(docid) filter over
+        the docmap files (row groups prune on segment/docid stats) — no
+        Spark job. segment/docid (parallel, non-empty) name the pairs.
+        Returns a pyarrow Table (segment, docid, *cols) of the pairs
+        found, in file order.
+
+        Raises when a requested column carries a docvalues-update overlay:
+        overlays are applied by docmap() only, so the caller must take the
+        Spark path (a raw read would return the pre-update value)."""
+        import pyarrow.dataset as pads
+        overlaid = {e["field"] for e in self.manifest.get("dv_updates", [])}
+        if overlaid & set(cols):
+            raise ValueError(f"docvalues overlay on {sorted(overlaid)}")
+        dirs = tuple(os.path.join(self.root, d, "kind=docmap")
+                     for d in self.manifest["batches"])
+        dset = self._pads_dataset(dirs)
+        by_seg: dict = {}
+        for s, d in zip(segment, docid):
+            by_seg.setdefault(int(s), []).append(int(d))
+        expr = None
+        for s, ds in sorted(by_seg.items()):
+            e = (pads.field("segment") == s) & pads.field("docid").isin(
+                sorted(ds))
+            expr = e if expr is None else expr | e
+        return dset.to_table(filter=expr,
+                             columns=["segment", "docid", *cols])
+
     def hard_deletes(self) -> DataFrame | None:
         """Hard-tombstoned (segment, docid) rows committed by
         operators.deletes (the liveDocs analogue), or None."""

@@ -14,9 +14,13 @@ batch {qid: Query} (SURVEY.md §3.2 Spark translation):
               - norms only: MatchAll queries over segments holding none of
                 the batch's terms
             -> per-segment (qid, segment, docid, score) candidates
-  driver:   ORDER BY score DESC, segment, docid LIMIT k (Catalyst
-            TakeOrderedAndProject) == TopDocs.merge tie semantics
-            (solr-8.4.0/.../search/TopDocs.java:75,106)
+  driver:   search/payload_score collect ORDER BY score DESC, segment,
+            docid LIMIT k (Catalyst TakeOrderedAndProject: per-task
+            takeOrdered + driver merge == TopDocs.merge tie semantics,
+            solr-8.4.0/.../search/TopDocs.java:75,106), read the k hits'
+            ids with a pyarrow docmap point read, and return an Arrow
+            local frame (Searcher._top_docs) — a cold broadcast-norms
+            query is 2 Spark jobs, and collecting its result runs none
 
 The postings scan carries a pushed-down IN(term, ...) filter; postings files
 are written sorted by term, so parquet row-group stats prune the scan — the
@@ -30,6 +34,7 @@ import os
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .functions import bm25
@@ -41,6 +46,15 @@ from .operators.search import (SparkSegmentReader, blockmax_topk,
 from .plans import query as Q
 from .plans.query import (RewriteContext, key_field, key_term, term_key,
                           rewrite as rewrite_query)
+
+
+def _local_frame(spark, cols: dict, schema: str) -> DataFrame:
+    """A driver-built result frame: createDataFrame over a pyarrow Table
+    is a LocalRelation, so collecting it (or joining it, broadcast) runs
+    no job. createDataFrame(list) is a parallelize — one job of
+    defaultParallelism tasks per call, enough to make a driver-side id
+    attach slower than the broadcast join it replaced."""
+    return spark.createDataFrame(pa.table(cols), schema)
 
 
 def _rank_limited(df, order, part):
@@ -660,7 +674,9 @@ class Searcher:
         # answered without the kernel anyway unless a MatchAll is involved
         empty_postings = all(stats.doc_freqs.get(t, 0) == 0 for t in terms)
         if empty_postings and not matchall:
-            return self.index.spark.createDataFrame([], schema)
+            return _local_frame(self.index.spark,
+                                dict.fromkeys(("qid", "segment", "docid",
+                                               "score"), []), schema)
 
         del_bc = self._deleted_broadcast()
         big_deletes = self._big_deletes
@@ -804,21 +820,62 @@ class Searcher:
         """Top-k BM25. Returns DataFrame(rank, segment, docid, score [, id
         cols]) with (score desc, segment asc, docid asc) order.
 
+        Eager, like IndexSearcher.search returning TopDocs: the scoring
+        job and the final reduce run at call time, the k hits pass the
+        driver (as TopDocs do) and the result is a driver-built local
+        frame — collecting it launches no further job (_top_docs).
+
         after=(score, segment, docid) pages past a previous result row
         (searchAfter, IndexSearcher.java:388-422)."""
-        res = (self._score({"q": query}, k, mode, after)
-               .orderBy(F.desc("score"), "segment", "docid").limit(k))
-        res = _rank_limited(
-            res, [F.desc("score"), "segment", "docid"], "docid")
+        return self._top_docs(self._score({"q": query}, k, mode, after),
+                              k, with_ids)
+
+    def _top_docs(self, cands: DataFrame, k: int, with_ids: bool
+                  ) -> DataFrame:
+        """The final reduce of a top-k search, on the caller's thread as
+        in the reference (TopDocs.merge, TopDocs.java:75,106 over the
+        per-slice top-k, IndexSearcher.java:410-416). ORDER BY score DESC,
+        segment, docid LIMIT k collects through Catalyst
+        TakeOrderedAndProject — a per-task takeOrdered plus a driver merge,
+        no extra stage — and rank is the position. Only those k hits read
+        their stored id columns (IndexSnapshot.docmap_lookup, a pyarrow
+        point read; the pushed-down docmap scan is the fallback when the
+        index directory is not readable here or an id column carries a
+        docvalues overlay). cands: (segment, docid, score[, ...])."""
+        rows = (cands.orderBy(F.desc("score"), "segment", "docid")
+                .limit(k).select("segment", "docid", "score").collect())
+        seg = [r.segment for r in rows]
+        doc = [r.docid for r in rows]
+        cols = {"rank": np.arange(1, len(rows) + 1, dtype=np.int32),
+                "segment": np.array(seg, np.int32),
+                "docid": np.array(doc, np.int64),
+                "score": np.array([r.score for r in rows], np.float32)}
+        schema = "rank int not null, segment int, docid long, score float"
         if with_ids:
-            dm = self.index.docmap().select(
-                "segment", "docid", *self.index.id_cols)
-            # k rows vs the full docmap: broadcast the tiny result side
-            res = dm.join(F.broadcast(res), on=["segment", "docid"],
-                          how="inner")
-        cols = ["rank", "segment", "docid", "score"] + (
-            self.index.id_cols if with_ids else [])
-        return res.select(*cols).orderBy("rank")
+            schema += "".join(f", {n} {t}" for n, t in self.index.id_fields)
+            cols.update(self._stored_ids(seg, doc) if rows else
+                        dict.fromkeys(self.index.id_cols, []))
+        return _local_frame(self.index.spark, cols, schema)
+
+    def _stored_ids(self, seg: list, doc: list) -> dict:
+        """{id col: values} aligned with the (segment, docid) hits."""
+        ids = self.index.id_cols
+        try:
+            got = self.index.docmap_lookup(seg, doc, ids)
+        except Exception:
+            by_seg: dict = {}
+            for sg, d in zip(seg, doc):
+                by_seg.setdefault(sg, []).append(str(d))
+            # ONE pushed-down predicate string (one py4j round trip)
+            pred = " OR ".join(
+                f"(segment = {sg} AND docid IN ({', '.join(ds)}))"
+                for sg, ds in sorted(by_seg.items()))
+            got = (self.index.docmap().where(F.expr(pred))
+                   .select("segment", "docid", *ids).toArrow())
+        at = {p: i for i, p in enumerate(zip(got["segment"].to_pylist(),
+                                             got["docid"].to_pylist()))}
+        got = got.take([at[p] for p in zip(seg, doc)])
+        return {c: got[c] for c in ids}
 
     def matches(self, query) -> DataFrame:
         """All matching docs: DataFrame(segment, docid, score)."""
@@ -1090,12 +1147,12 @@ class Searcher:
                         .join(dels, ["segment", "docid"], "left_anti")
                         .select(F.col(id0).alias(vec_id_col)))
                 cand = cand.join(live, vec_id_col, "left_semi")
-        rows = []
-        for qid, qv in queries.items():
-            qv = [float(x) for x in qv]
-            rows.append((str(qid), qv, float(np.sqrt(np.dot(qv, qv)))))
-        probe = self.index.spark.createDataFrame(
-            rows, "qid string, qvec array<double>, qnorm double")
+        qvecs = [[float(x) for x in qv] for qv in queries.values()]
+        probe = _local_frame(
+            self.index.spark,
+            {"qid": [str(qid) for qid in queries], "qvec": qvecs,
+             "qnorm": [float(np.sqrt(np.dot(qv, qv))) for qv in qvecs]},
+            "qid string, qvec array<double>, qnorm double")
         scored = (with_norm(cand, vec_col)
                   .crossJoin(F.broadcast(probe))
                   .select("qid", F.col(vec_id_col),
@@ -1208,18 +1265,10 @@ class Searcher:
                 "docid": docids,
                 "score": agg.astype(np.float32)})
 
-        res = (post.groupBy("segment")
-               .applyInPandas(kernel,
-                              schema="segment int, docid long, score float")
-               .orderBy(F.desc("score"), "segment", "docid").limit(k))
-        res = _rank_limited(
-            res, [F.desc("score"), "segment", "docid"], "docid")
-        dm = self.index.docmap().select(
-            "segment", "docid", *self.index.id_cols)
-        res = dm.join(F.broadcast(res), on=["segment", "docid"],
-                      how="inner")
-        return (res.select("rank", "segment", "docid", "score",
-                           *self.index.id_cols).orderBy("rank"))
+        return self._top_docs(
+            post.groupBy("segment").applyInPandas(
+                kernel, schema="segment int, docid long, score float"),
+            k, with_ids=True)
 
     def term_offsets(self, term: str, field: str | None = None
                      ) -> DataFrame:
@@ -2053,8 +2102,10 @@ class Searcher:
         if base:
             # query2's scores for the first-pass docs only; docs it does
             # not match (in any segment) keep their base score
-            pairs = self.index.spark.createDataFrame(
-                list(base), "segment int, docid long")
+            pairs = _local_frame(
+                self.index.spark,
+                {"segment": [x[0] for x in base],
+                 "docid": [x[1] for x in base]}, "segment int, docid long")
             add = {(int(r.segment), int(r.docid)): np.float32(r.score)
                    for r in self._score({"q": query2}, None, "complete")
                    .join(F.broadcast(pairs), ["segment", "docid"])
@@ -2068,9 +2119,10 @@ class Searcher:
                 + (np.float32(weight) * a).astype(np.float64)
                 ).astype(np.float32)
         top = np.lexsort((doc, seg, -comb))[:k]
-        return self.index.spark.createDataFrame(
-            [(int(seg[i]), int(doc[i]), float(comb[i]), r + 1)
-             for r, i in enumerate(top)],
+        return _local_frame(
+            self.index.spark,
+            {"segment": seg[top], "docid": doc[top], "score": comb[top],
+             "rank": np.arange(1, len(top) + 1, dtype=np.int32)},
             "segment int, docid long, score float, rank int")
 
 

@@ -182,7 +182,7 @@ def _oracle_in_engine_order(pdf, idx):
     """Oracle over docs ordered (segment asc, docid asc) so global tie-break
     order matches the engine's (TopDocs.java:75 analogue)."""
     dm = idx.docmap().toPandas().sort_values(["segment", "docid"])
-    ordered = dm[["id"]].merge(pdf, on="id")
+    ordered = dm[["segment", "docid", "id"]].merge(pdf, on="id")
     return oracle.OracleEngine(*oracle.index_corpus(
         ordered.reset_index(drop=True), text_col="content")), ordered
 

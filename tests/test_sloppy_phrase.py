@@ -133,16 +133,17 @@ def test_vectorized_2term_matches_heap_walk_random():
         assert [F32(x) for x in vf] == exp_f, (trial, slop, per_doc)
 
 
-def test_vectorized_kterm_matches_heap_walk_random():
-    """Property: the k-pointer round simulation (_sloppy_match_k, k >= 3
-    distinct terms) reproduces the PhraseQueue heap walk bit-for-bit —
-    docids, float32 sloppyFreq, and fold order — across random position
-    data, slops and k."""
+def _kterm_parity(seed, positions, k_range=(3, 6), two_term=False):
+    """The vectorized sloppy matcher (_sloppy_match_k, or _sloppy_match_2
+    when two_term) against the per-doc PhraseQueue heap walk over random
+    docs; positions(rng, n) draws one slot's sorted position list."""
     from lucene_7_x_9_x_spark.operators.executor import (_sloppy_freq_doc,
+                                                         _sloppy_match_2,
                                                          _sloppy_match_k)
-    rng = np.random.RandomState(777)
+    match = _sloppy_match_2 if two_term else _sloppy_match_k
+    rng = np.random.RandomState(seed)
     for trial in range(400):
-        k = int(rng.randint(3, 6))
+        k = int(rng.randint(*k_range))
         n_docs = rng.randint(1, 6)
         slop = int(rng.randint(0, 8))
         per_slot = [[] for _ in range(k)]
@@ -150,9 +151,7 @@ def test_vectorized_kterm_matches_heap_walk_random():
         for d in range(n_docs):
             lists = []
             for s in range(k):
-                ns = rng.randint(1, 8)
-                lists.append(np.unique(
-                    rng.randint(0, 30, size=ns)).astype(np.int64))
+                lists.append(positions(rng, rng.randint(1, 8)))
                 per_slot[s].append(lists[-1])
             per_doc.append(lists)
         d_arr = np.arange(n_docs, dtype=np.int64)
@@ -160,7 +159,7 @@ def test_vectorized_kterm_matches_heap_walk_random():
         for s in range(k):
             counts = np.asarray([len(x) for x in per_slot[s]], np.int64)
             flats.append((d_arr, counts, np.concatenate(per_slot[s])))
-        vd, vf = _sloppy_match_k(flats, d_arr, slop)
+        vd, vf = match(flats, d_arr, slop)
         exp_d, exp_f = [], []
         for d, lists in enumerate(per_doc):
             f = _sloppy_freq_doc(lists, slop)
@@ -169,3 +168,28 @@ def test_vectorized_kterm_matches_heap_walk_random():
                 exp_f.append(f)
         assert vd.tolist() == exp_d, (trial, k, slop, per_doc)
         assert [F32(x) for x in vf] == exp_f, (trial, k, slop, per_doc)
+
+
+def test_vectorized_kterm_matches_heap_walk_random():
+    """Property: the k-pointer round simulation (_sloppy_match_k, k >= 3
+    distinct terms) reproduces the PhraseQueue heap walk bit-for-bit —
+    docids, float32 sloppyFreq, and fold order — across random position
+    data, slops and k."""
+    _kterm_parity(777, lambda rng, n: np.unique(
+        rng.randint(0, 30, size=n)).astype(np.int64))
+
+
+def _with_duplicates(rng, n):
+    return np.sort(rng.randint(0, 12, size=n)).astype(np.int64)
+
+
+def test_vectorized_kterm_matches_heap_walk_duplicate_positions():
+    """Same property over position lists WITH duplicates (np.sort, not
+    np.unique) — the stream shape of a MultiPhraseQuery slot union, whose
+    member terms may share a position and are kept once each."""
+    _kterm_parity(778, _with_duplicates)
+
+
+def test_vectorized_2term_matches_heap_walk_duplicate_positions():
+    """The 2-slot closed form over the same slot-union-shaped streams."""
+    _kterm_parity(779, _with_duplicates, k_range=(2, 3), two_term=True)
